@@ -34,10 +34,10 @@ object TraceQueries {
   }
 
   /** get-trace by ID: single-key lookup, partial rows merged
-    * (KafkaStorageHttpService.java:243-266).
+    * (KafkaStorageHttpService.java:243-266) — see [[mergeOnDriver]].
     */
   def getTrace(traces: Dataset[Trace], traceId: String): Dataset[Trace] =
-    mergeByTraceId(traces.where(col("trace_id") === Spans.normalizeTraceId(traceId)))
+    mergeOnDriver(traces.where(col("trace_id") === Spans.normalizeTraceId(traceId)))
 
   /** get-traces by ID list, capped at 1,000 ids (SURVEY §2.5 J4, W4).
     * Multiple rows per id (at-least-once appends, multi-session partials)
@@ -46,7 +46,7 @@ object TraceQueries {
     */
   def getTraceMany(traces: Dataset[Trace], traceIds: Seq[String]): Dataset[Trace] = {
     val ids = traceIds.take(1000).map(Spans.normalizeTraceId)
-    mergeByTraceId(traces.where(col("trace_id").isin(ids: _*)))
+    mergeOnDriver(traces.where(col("trace_id").isin(ids: _*)))
   }
 
   /** All service names, sorted, capped 1,000 (KafkaSpanStore.java:130). */
@@ -118,14 +118,15 @@ object TraceQueries {
     * partial traces collapse here, exactly like the reference's query-time
     * fetch+merge (TraceStorageTopology.java:108-115 / zipkin-core
     * Trace.merge). TraceMerge is idempotent, so already-canonical rows pass
-    * through unchanged.
+    * through unchanged. The merge is distributed (one groupByKey shuffle):
+    * unlike a by-id lookup, a range read has no bound on its row count.
     */
-  def fromStore(df: DataFrame): Dataset[Trace] =
-    mergeByTraceId {
-      val spark = df.sparkSession
-      import spark.implicits._
-      df.select("trace_id", "spans", "root_ts").as[Trace]
-    }
+  def fromStore(df: DataFrame): Dataset[Trace] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select("trace_id", "spans", "root_ts").as[Trace]
+      .groupByKey(_.trace_id).mapGroups((id, it) => mergeRows(id, it.toSeq))
+  }
 
   /** getTrace served from the bucketed point-lookup store (S8/S9: the
     * reference routes a key to the single store instance owning it,
@@ -143,7 +144,7 @@ object TraceQueries {
     mergeBucketed(store.where(col("trace_id").isin(ids: _*)))
   }
 
-  /** Shuffle-free twin of [[mergeByTraceId]] for inputs already
+  /** Shuffle-free twin of [[fromStore]]'s merge for inputs already
     * hash-clustered on trace_id (the bucketed layout): grouping RELATIONALLY
     * on the physical column lets the bucketed scan's HashPartitioning
     * satisfy mapGroups' required distribution, so no Exchange is planned —
@@ -158,15 +159,19 @@ object TraceQueries {
       .mapGroups((id, it) => mergeRows(id, it.toSeq))
   }
 
-  /** Query-time fetch+merge per trace id. The merged trace keeps its
-    * recomputed root timestamp, falling back to the smallest stored root_ts
-    * when spans carry none — preserving the store's close-time placement for
-    * timestamp-less traces (they must stay findable by range queries).
+  /** By-id fetch+merge in the service, as the reference fetches by key and
+    * merges (KafkaStorageHttpService.java:243-290): the rows of at most
+    * 1,000 ids are collected (over a store read: one scan job, no Exchange),
+    * merged per id with the same [[mergeRows]] as the distributed path, and
+    * returned as a local Dataset sorted by trace id. The collect runs when
+    * the lookup is called. A distributed merge would add a shuffle and two
+    * jobs per lookup for a result this small.
     */
-  private def mergeByTraceId(ds: Dataset[Trace]): Dataset[Trace] = {
+  private def mergeOnDriver(ds: Dataset[Trace]): Dataset[Trace] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.trace_id).mapGroups((id, it) => mergeRows(id, it.toSeq))
+    spark.createDataset(ds.collect().toSeq.groupBy(_.trace_id).toSeq.sortBy(_._1)
+      .map { case (id, rows) => mergeRows(id, rows) })
   }
 
   // row collapse shared with StoreLayout.compactTraces — see Traces.mergeRows

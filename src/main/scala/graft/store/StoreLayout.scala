@@ -100,7 +100,7 @@ object StoreLayout {
   def readTraces(spark: SparkSession, path: String, endTs: Long, lookback: Long): DataFrame =
     readPartitioned(spark, path, "trace_date",
       Some(utcLocalDate(endTs - lookback)), Some(utcLocalDate(endTs)),
-      emptySchema = Some(org.apache.spark.sql.Encoders.product[Trace].schema
+      schema = Some(org.apache.spark.sql.Encoders.product[Trace].schema
         .add("trace_date", org.apache.spark.sql.types.DateType)))
       .where(col("trace_date").between(utcDate(endTs - lookback), utcDate(endTs)))
       .where(col("root_ts").between((endTs - lookback) * 1000, endTs * 1000))
@@ -393,11 +393,20 @@ object StoreLayout {
     * relations and dominate small-query latency). A deployment beyond this
     * graduates to a real table format (Iceberg/Delta), which is this same
     * pointer idea with a manifest tree.
+    *
+    * `schema` is the read contract: the store's data columns plus
+    * `partitionCol` as a DateType, exactly as its writer lays them out. Every
+    * leg reads with it (the explicit-file leg without the partition column,
+    * which it derives from the path), so no read pays a Spark job to infer
+    * the schema of files this library wrote, and a never-written store or a
+    * range matching no partition serves it typed-empty. Only schema-less
+    * callers (whole-store views: [[readAll]], an untyped [[readSetStore]])
+    * infer from parquet footers.
     */
   private[graft] def readPartitioned(spark: SparkSession, path: String,
       partitionCol: String, min: Option[java.time.LocalDate],
       max: Option[java.time.LocalDate],
-      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val inRange = (d: java.time.LocalDate) =>
@@ -405,46 +414,45 @@ object StoreLayout {
     val parts: Seq[(java.time.LocalDate, org.apache.hadoop.fs.Path)] =
       if (!fs.exists(root)) Seq.empty
       else datePartitionDirs(fs, root, partitionCol)
-    // a store that was never written (absent root / no partition dir yet —
-    // e.g. the query surface probing before the first micro-batch commits)
-    // serves EMPTY, like the reference's empty RocksDB store, when the
-    // caller can state the schema; without one the discovery scan below
-    // would throw PATH_NOT_FOUND / unable-to-infer-schema
-    if (parts.isEmpty)
-      emptySchema.foreach { schema =>
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      }
     val selected = parts.filter(p => inRange(p._1))
+    def typedEmpty(s: org.apache.spark.sql.types.StructType) =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    if (selected.isEmpty) schema match {
+      // nothing to scan — a store that was never written (absent root / no
+      // partition dir yet, e.g. the query surface probing before the first
+      // micro-batch commits) or a range matching no partition — serves
+      // EMPTY, like the reference's empty RocksDB store
+      case Some(s) => return typedEmpty(s)
+      case None =>
+        // schema-less: a fully-converged store may hold its data only in
+        // (hidden) generation dirs, where a discovery scan fails schema
+        // inference, so take the schema from a resolved partition. Probe
+        // until one yields inputs: the first may be an empty husk (e.g.
+        // only a dangling pointer left by an interrupted race) while the
+        // rest of the store holds the schema
+        parts.view.map(p => resolveGen(fs, p._2)).find(_.inputs.nonEmpty)
+          .foreach { any =>
+            return typedEmpty(spark.read.parquet(any.inputs.map(_.toString): _*).schema
+              .add(partitionCol, org.apache.spark.sql.types.DateType))
+          }
+    }
     val resolved = resolveAll(fs, selected)
     val (genParts, plainParts) = resolved.partition(_._2.current.isDefined)
+    def reader(s: Option[org.apache.spark.sql.types.StructType]) =
+      s.fold(spark.read)(spark.read.schema(_))
+    val discovery = reader(schema)
 
-    if (selected.isEmpty && parts.nonEmpty) {
-      // range matches no partition, but a fully-converged store may hold its
-      // data only in (hidden) generation dirs — a discovery scan would fail
-      // schema inference, so build the empty result from a resolved schema.
-      // Probe partitions until one yields inputs: the first may be an empty
-      // husk (e.g. only a dangling pointer left by an interrupted race)
-      // while the rest of the store holds the schema
-      parts.view.map(p => resolveGen(fs, p._2)).find(_.inputs.nonEmpty)
-        .foreach { any =>
-          val schema = spark.read.parquet(any.inputs.map(_.toString): _*).schema
-            .add(partitionCol, org.apache.spark.sql.types.DateType)
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        }
-    }
     if (genParts.isEmpty) {
       // fast path: no generation anywhere in range — the plain layout's one
-      // discovery scan (also covers the empty-range case over a plain store)
-      spark.read.parquet(path)
+      // discovery scan
+      discovery.parquet(path)
     } else {
       val legs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       if (plainParts.exists(_._2.loose.nonEmpty)) {
         // one discovery leg for every untouched date: normal partition
         // discovery + an isin partition filter (pruned at planning time)
         val dates = plainParts.map(_._1.toString)
-        legs += spark.read.parquet(path)
+        legs += discovery.parquet(path)
           .where(col(partitionCol).isInCollection(
             dates.map(java.sql.Date.valueOf)))
       }
@@ -455,7 +463,9 @@ object StoreLayout {
       // a store rooted under a look-alike dir name cannot confuse it). The
       // derivation is a codegen'd projection — no shuffle, no per-leg plan
       val genInputs = genParts.flatMap(_._2.inputs)
-      legs += spark.read.parquet(genInputs.map(_.toString): _*)
+      legs += reader(schema.map(s => org.apache.spark.sql.types.StructType(
+          s.filterNot(_.name == partitionCol))))
+        .parquet(genInputs.map(_.toString): _*)
         .withColumn(partitionCol, to_date(regexp_extract(
           col("_metadata.file_path"),
           ".*/" + java.util.regex.Pattern.quote(partitionCol) +
@@ -825,9 +835,9 @@ object StoreLayout {
     compactPartitions(spark, path, "seen_date", dates)(df =>
       collapseSetDeltas(df.select(col(keyCol), col(setCol)), keyCol, setCol).coalesce(1))
 
-  /** What [[writeDependencyWindows]] physically writes — the typed-empty
-    * schema a never-written window store serves (readers filter on these
-    * columns, so a schemaless empty frame would fail resolution).
+  /** What [[writeDependencyWindows]] physically writes — the schema every
+    * window-store read states (see [[readPartitioned]]), and so also the
+    * typed-empty shape a never-written store serves.
     */
   private val windowStoreSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -843,13 +853,14 @@ object StoreLayout {
 
   /** Read a date-partitioned set-delta store through the generation layout
     * (full range — the serving shape collapses across all retained dates).
-    * `emptySchema` (including the `seen_date` column) lets a never-written
-    * store serve typed-empty instead of failing discovery — pass it where
-    * the caller knows its (key, set) shape.
+    * `schema` (including the `seen_date` column) is the read contract of
+    * [[readPartitioned]]: pass it where the caller knows its (key, set)
+    * shape, and the read infers nothing and a never-written store serves
+    * typed-empty instead of failing discovery.
     */
   def readSetStore(spark: SparkSession, path: String,
-      emptySchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    readPartitioned(spark, path, "seen_date", None, None, emptySchema)
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    readPartitioned(spark, path, "seen_date", None, None, schema)
       .drop("seen_date")
 
   /** Dependency-window store partitioned by window date. Unlike
@@ -883,7 +894,7 @@ object StoreLayout {
     * `batch_id` (see [[writeDependencyWindows]]) makes the collapse exact:
     * a replayed attempt repeats its id and dedups away, while genuine
     * partial sums from different appends differ in batch_id and both count
-    * even when their values coincide. The dedup shuffle runs after
+    * even when their values coincide. The one shuffle (by edge) runs after
     * pruning — only the queried date range, not the store; `batch_id` is
     * dropped afterwards so the query surface sees the window schema.
     */
@@ -891,9 +902,13 @@ object StoreLayout {
       lookback: Long): DataFrame =
     readPartitioned(spark, path, "window_date",
       Some(utcLocalDate(endTs - lookback)), Some(utcLocalDate(endTs)),
-      emptySchema = Some(windowStoreSchema))
+      schema = Some(windowStoreSchema))
       .where(col("window_date").between(utcDate(endTs - lookback), utcDate(endTs)))
       .where(col("window_start_ms").between(endTs - lookback, endTs))
+      // hash by edge BEFORE the dedup: that one exchange satisfies both the
+      // full-row dedup (its keys include the edge) and the query surface's
+      // groupBy(parent, child) sum, so the read plus the merge shuffle once
+      .repartition(col("parent"), col("child"))
       .dropDuplicates()
       .drop("batch_id")
 

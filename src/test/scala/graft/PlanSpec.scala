@@ -206,6 +206,15 @@ class PlanSpec extends SparkSpec {
       1705708800000L, 864000000L), storeDir, "window_date")
   }
 
+  test("q_store_dependencies: the window-store read and the edge merge shuffle once") {
+    // the read hashes by edge before its replay dedup, and that one exchange
+    // also serves the query surface's groupBy(parent, child)
+    val df = SparkEntry.queries("q_store_dependencies")(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(shuffleExchanges(plan) == 1, s"expected exactly one ShuffleExchangeExec:\n$plan")
+  }
+
   test("q_store_autocomplete: key filter pushes below the collapse to the scan") {
     val df = SparkEntry.queries("q_store_autocomplete")(spark, dir) // builds the store
     val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
